@@ -2063,7 +2063,7 @@ def q_x_group_quantiles_radix(spark: SparkSession, sf_dir: str) -> DataFrame:
 #          introduced). Registry 146 -> 148 (cap 150 = 50 slots x
 #          3-round staleness window, now refused mechanically by
 #          tools/gate.py).
-#   r13 (NOW, optimization round): pure steady-state rotation. After
+#   r13 (optimization round): pure steady-state rotation. After
 #          r12's rows the stale set is exactly the 50-query r10 block
 #          (tp_clean_corpus re-rowed in r12's head, so the block the r12
 #          note predicted as 49 plus the boundary shift lands at a full
@@ -2073,6 +2073,15 @@ def q_x_group_quantiles_radix(spark: SparkSession, sf_dir: str) -> DataFrame:
 #          the stale set is the 48-query r11 block — two free slots; the
 #          r12-legacy promotion candidate x_group_quantiles_radix is
 #          first in line.
+#   r14 (NOW): pure steady-state rotation. After r13's rows the stale
+#          set is the 48-query r11 block — it takes slots 1-48 (prior
+#          slot order); the two free slots 49-50 take the next-oldest
+#          entries, the first two r12-row queries (x_gini_concentration,
+#          x_markov_transitions). No promotion or demotion (the r13 note's
+#          x_group_quantiles_radix promotion was deferred: this round
+#          changes no driver surface). Registry stays 148; the r12-row
+#          remainder (slots 51-98) is the r15 stale set, the r13-row
+#          block sits at the tail (slots 99-148).
 #
 # Consolidated under the cap (each absorbed operator stays oracle-checked
 # inside the named query, and the standalone legacy twins below stay
@@ -2087,9 +2096,122 @@ def q_x_group_quantiles_radix(spark: SparkSession, sf_dir: str) -> DataFrame:
 #   grouping-sets family (cube twin stays in the legacy registry);
 #   dd_simhash_banded covers SimHash (pairwise twin in legacy registry).
 QUERIES: dict[str, QueryFn] = {
-    # --- r13 head slots 1-50: ALL queries whose newest driver row is
-    # r10 (the complete stale set tests/test_rotation.py derives, prior
-    # slot order; it fills the head exactly — no free slot this round) ---
+    # --- r14 head slots 1-48: ALL queries whose newest driver row is
+    # r11 (the complete stale set tests/test_rotation.py derives, prior
+    # slot order: r13 slots 101-148). The r11-row block was the r11 head
+    # minus w_attribution_decay / w_attribution_ushape — demoted to the
+    # legacy registry in the r12 composition review (derived reweightings
+    # of the SAME touch relation as w_attribution /
+    # w_attribution_multitouch, which stay) ---
+    "a14_forecast_backtest": q_a14_forecast_backtest,
+    "x_skew_report": q_x_skew_report,
+    "x_benford_check": q_x_benford_check,
+    "dd_cluster_sizes": q_dd_cluster_sizes,
+    "ts_langid_confusion": q_ts_langid_confusion,
+    "x_ks_drift": q_x_ks_drift,
+    "x_psi_drift": q_x_psi_drift,
+    "x_kmv_overlap": q_x_kmv_overlap,
+    "x_spearman": q_x_spearman,
+    "x_emd_drift": q_x_emd_drift,
+    "x_mannwhitney": q_x_mannwhitney,
+    "x_cramers_v": q_x_cramers_v,
+    "x_psi_daily": q_x_psi_daily,
+    "ts_auc_langid": q_ts_auc_langid,
+    "ts_pr_summary_langid": q_ts_pr_summary_langid,
+    "ts_auc_by_source": q_ts_auc_by_source,
+    "x_winsorized_stats": q_x_winsorized_stats,
+    "x_selfjoin_density": q_x_selfjoin_density,
+    "ann_recall_report": q_ann_recall_report,
+    "x_cohens_kappa": q_x_cohens_kappa,
+    "ts_langid_prf": q_ts_langid_prf,
+    "ts_auc_doclen": q_ts_auc_doclen,
+    "tp_shard_manifest": q_tp_shard_manifest,
+    "a15_mad_outliers": q_a15_mad_outliers,
+    "w_attribution": q_w_attribution,
+    "a16_autocorrelation": q_a16_autocorrelation,
+    "x_zorder_layout": q_x_zorder_layout,
+    "a17_dow_baseline": q_a17_dow_baseline,
+    "x_activity_bitmap": q_x_activity_bitmap,
+    "x_skipping_report": q_x_skipping_report,
+    "x_zorder_ranked": q_x_zorder_ranked,
+    "x_compaction_plan": q_x_compaction_plan,
+    "tp_sample_allocation": q_tp_sample_allocation,
+    "w_attribution_multitouch": q_w_attribution_multitouch,
+    "x_fano_burstiness": q_x_fano_burstiness,
+    "x_incremental_gold": q_x_incremental_gold,
+    "x_hll_distinct": q_x_hll_distinct,
+    "x_retention_cohorts": q_x_retention_cohorts,
+    "x_scd2_asof": q_x_scd2_asof,
+    "ts_pii_scrub": q_ts_pii,
+    "a19_mann_kendall": q_a19_mann_kendall,
+    "a20_pettitt": q_a20_pettitt,
+    "w_rfm_segments": q_w_rfm_segments,
+    "x_cohort_ltv": q_x_cohort_ltv,
+    "tp_padding_efficiency": q_tp_padding_efficiency,
+    "tp_chunk_documents": q_tp_chunk_documents,
+    "o11_keyset_page": q_o11_keyset_page,
+    "ts_auc_hashclf": q_ts_auc_hashclf,
+    # --- slots 49-50: the two free slots take the next-oldest entries,
+    # the first two r12-row queries in prior slot order (no promotion
+    # or demotion this round) ---
+    "x_gini_concentration": q_x_gini_concentration,
+    "x_markov_transitions": q_x_markov_transitions,
+    "dd_lsh_tuning": q_dd_lsh_tuning,
+    "tp_contamination_report": q_tp_contamination_report,
+    "w_top_paths": q_w_top_paths,
+    "ts_hashclf_drift": q_ts_hashclf_drift,
+    "tp_quality_curve": q_tp_quality_curve,
+    "a2_hourly_ohlc": q_a2,
+    "a4_sales_velocity": q_a4,
+    "a5_market_concentration": q_a5,
+    "a7_sector_trends": q_a7,
+    "a9_kpi_counts": q_a9,
+    "j1_missing_items": q_j1,
+    "j2_dim_enrichment": q_j2,
+    "o1_latest_daily_summaries": q_o1,
+    "o2_item_price_history": q_o2,
+    "o3_sell_opportunities": q_o3,
+    "o5_top_concentration": q_o5,
+    "o6_latest_index": q_o6,
+    "o7_items_page": q_o7,
+    "o9_best_opportunity": q_o9,
+    "o10_topk_per_group": q_o10_topk_per_group,
+    "f4_retention_candidates": q_f4,
+    "p11_format_gold": q_p11,
+    "pj_json_kpis": q_pjson,
+    "w_sessionize": q_w_sessionize,
+    "x_pivot_event_counts": q_x_pivot,
+    "x_sector_rollup": q_x_rollup,
+    "w_funnel": q_w_funnel,
+    "x_pagerank": q_x_pagerank,
+    "dd_cdc_segments": q_dd_cdc_segments,
+    "tp_bpe_encode": q_tp_bpe_encode,
+    "a1_daily_market_summary": q_a1,
+    "a3_rolling_zscore": q_a3,
+    "a6_market_index": q_a6,
+    "x_asof_join": q_x_asof,
+    "x_range_join": q_x_range_join,
+    "x_multiway_star_join": q_x_multiway,
+    "x_price_iqr_outliers": q_x_iqr,
+    "dd_exact": q_dd_exact,
+    "dd_minhash_lsh": q_dd_minhash,
+    "dd_simhash_banded": q_dd_simhash_banded,
+    "tp_keep_best": q_tp_keep_best,
+    "dd_semantic": q_dd_semantic,
+    "dd_embed_lsh": q_dd_embed_lsh,
+    # --- (r12 head slots 46-49) r12 promotions from the legacy registry (r11
+    # STATUS candidates — distinct capabilities without a driver row:
+    # seasonal MK trend test, RFM period-over-period migration, Wilson-CI
+    # funnel transitions, A/B sample-ratio-mismatch gate) ---
+    "a21_seasonal_mann_kendall": q_a21_seasonal_mk,
+    "x_rfm_migration": q_x_rfm_migration,
+    "w_funnel_wilson": q_w_funnel_wilson,
+    "x_abtest_srm": q_x_abtest_srm,
+    # --- (r12 head slot 50) r12 addition at authoring time (displaced the
+    # tp_clean_corpus boundary filler below the line) ---
+    "x_exact_quantiles": q_x_exact_quantiles,
+    # --- slots 99-148: the r13-row block (freshest external evidence,
+    # prior r13-head order; it was the complete r10-row stale set) ---
     "tp_clean_corpus": q_tp_clean_corpus,
     "tp_train_sample": q_tp_train_sample,
     "tp_decontaminate": q_tp_decontaminate,
@@ -2140,137 +2262,20 @@ QUERIES: dict[str, QueryFn] = {
     "ts_zipf_fit": q_ts_zipf_fit,
     "x_abtest_welch": q_x_abtest_welch,
     "dd_jaccard_histogram": q_dd_jaccard_histogram,
-    # --- slots 51-100: the r12-row block (freshest external evidence,
-    # prior r12-head order). r12 head composition notes kept verbatim:
-    # slots below were the r12 head slots 1-45: ALL queries whose
-    # newest driver row was r9
-    # (the complete stale set tests/test_rotation.py derives, prior slot
-    # order), minus o12_search_after — demoted to the legacy registry in
-    # the r12 composition review (ledger above: the o11 keyset page is
-    # the scale-correct pagination capability; o12 is its search-after
-    # dialect over the same plan shape) ---
-    "x_gini_concentration": q_x_gini_concentration,
-    "x_markov_transitions": q_x_markov_transitions,
-    "dd_lsh_tuning": q_dd_lsh_tuning,
-    "tp_contamination_report": q_tp_contamination_report,
-    "w_top_paths": q_w_top_paths,
-    "ts_hashclf_drift": q_ts_hashclf_drift,
-    "tp_quality_curve": q_tp_quality_curve,
-    "a2_hourly_ohlc": q_a2,
-    "a4_sales_velocity": q_a4,
-    "a5_market_concentration": q_a5,
-    "a7_sector_trends": q_a7,
-    "a9_kpi_counts": q_a9,
-    "j1_missing_items": q_j1,
-    "j2_dim_enrichment": q_j2,
-    "o1_latest_daily_summaries": q_o1,
-    "o2_item_price_history": q_o2,
-    "o3_sell_opportunities": q_o3,
-    "o5_top_concentration": q_o5,
-    "o6_latest_index": q_o6,
-    "o7_items_page": q_o7,
-    "o9_best_opportunity": q_o9,
-    "o10_topk_per_group": q_o10_topk_per_group,
-    "f4_retention_candidates": q_f4,
-    "p11_format_gold": q_p11,
-    "pj_json_kpis": q_pjson,
-    "w_sessionize": q_w_sessionize,
-    "x_pivot_event_counts": q_x_pivot,
-    "x_sector_rollup": q_x_rollup,
-    "w_funnel": q_w_funnel,
-    "x_pagerank": q_x_pagerank,
-    "dd_cdc_segments": q_dd_cdc_segments,
-    "tp_bpe_encode": q_tp_bpe_encode,
-    "a1_daily_market_summary": q_a1,
-    "a3_rolling_zscore": q_a3,
-    "a6_market_index": q_a6,
-    "x_asof_join": q_x_asof,
-    "x_range_join": q_x_range_join,
-    "x_multiway_star_join": q_x_multiway,
-    "x_price_iqr_outliers": q_x_iqr,
-    "dd_exact": q_dd_exact,
-    "dd_minhash_lsh": q_dd_minhash,
-    "dd_simhash_banded": q_dd_simhash_banded,
-    "tp_keep_best": q_tp_keep_best,
-    "dd_semantic": q_dd_semantic,
-    "dd_embed_lsh": q_dd_embed_lsh,
-    # --- slots 46-49: r12 promotions from the legacy registry (r11
-    # STATUS candidates — distinct capabilities without a driver row:
-    # seasonal MK trend test, RFM period-over-period migration, Wilson-CI
-    # funnel transitions, A/B sample-ratio-mismatch gate) ---
-    "a21_seasonal_mann_kendall": q_a21_seasonal_mk,
-    "x_rfm_migration": q_x_rfm_migration,
-    "w_funnel_wilson": q_w_funnel_wilson,
-    "x_abtest_srm": q_x_abtest_srm,
-    # --- slot 50: r12 addition at authoring time (displaced the
-    # tp_clean_corpus boundary filler below the line) ---
-    "x_exact_quantiles": q_x_exact_quantiles,
-    # --- slots 101-148: the r11-row block (freshest external evidence,
-    # prior slot order), minus w_attribution_decay / w_attribution_ushape
-    # — demoted to the legacy registry in the r12 composition review
-    # (derived reweightings of the SAME touch relation as w_attribution /
-    # w_attribution_multitouch, which stay) ---
-    "a14_forecast_backtest": q_a14_forecast_backtest,
-    "x_skew_report": q_x_skew_report,
-    "x_benford_check": q_x_benford_check,
-    "dd_cluster_sizes": q_dd_cluster_sizes,
-    "ts_langid_confusion": q_ts_langid_confusion,
-    "x_ks_drift": q_x_ks_drift,
-    "x_psi_drift": q_x_psi_drift,
-    "x_kmv_overlap": q_x_kmv_overlap,
-    "x_spearman": q_x_spearman,
-    "x_emd_drift": q_x_emd_drift,
-    "x_mannwhitney": q_x_mannwhitney,
-    "x_cramers_v": q_x_cramers_v,
-    "x_psi_daily": q_x_psi_daily,
-    "ts_auc_langid": q_ts_auc_langid,
-    "ts_pr_summary_langid": q_ts_pr_summary_langid,
-    "ts_auc_by_source": q_ts_auc_by_source,
-    "x_winsorized_stats": q_x_winsorized_stats,
-    "x_selfjoin_density": q_x_selfjoin_density,
-    "ann_recall_report": q_ann_recall_report,
-    "x_cohens_kappa": q_x_cohens_kappa,
-    "ts_langid_prf": q_ts_langid_prf,
-    "ts_auc_doclen": q_ts_auc_doclen,
-    "tp_shard_manifest": q_tp_shard_manifest,
-    "a15_mad_outliers": q_a15_mad_outliers,
-    "w_attribution": q_w_attribution,
-    "a16_autocorrelation": q_a16_autocorrelation,
-    "x_zorder_layout": q_x_zorder_layout,
-    "a17_dow_baseline": q_a17_dow_baseline,
-    "x_activity_bitmap": q_x_activity_bitmap,
-    "x_skipping_report": q_x_skipping_report,
-    "x_zorder_ranked": q_x_zorder_ranked,
-    "x_compaction_plan": q_x_compaction_plan,
-    "tp_sample_allocation": q_tp_sample_allocation,
-    "w_attribution_multitouch": q_w_attribution_multitouch,
-    "x_fano_burstiness": q_x_fano_burstiness,
-    "x_incremental_gold": q_x_incremental_gold,
-    "x_hll_distinct": q_x_hll_distinct,
-    "x_retention_cohorts": q_x_retention_cohorts,
-    "x_scd2_asof": q_x_scd2_asof,
-    "ts_pii_scrub": q_ts_pii,
-    "a19_mann_kendall": q_a19_mann_kendall,
-    "a20_pettitt": q_a20_pettitt,
-    "w_rfm_segments": q_w_rfm_segments,
-    "x_cohort_ltv": q_x_cohort_ltv,
-    "tp_padding_efficiency": q_tp_padding_efficiency,
-    "tp_chunk_documents": q_tp_chunk_documents,
-    "o11_keyset_page": q_o11_keyset_page,
-    "ts_auc_hashclf": q_ts_auc_hashclf,
 }
 
 
 assert len(QUERIES) == 148, f"driver registry drifted: got {len(QUERIES)}"
-# r12 staleness-rotation invariants (see ledger above). The 50-slot head
+# r14 staleness-rotation invariants (see ledger above). The 50-slot head
 # boundary and the key ordering are load-bearing: the external driver
 # records exactly the first 50 dict keys.
-assert list(QUERIES)[0] == "tp_clean_corpus", "slot-1 drifted"
-assert list(QUERIES)[49] == "dd_jaccard_histogram", "slot-50 boundary drifted"
-assert list(QUERIES)[50] == "x_gini_concentration", "slot-51 drifted"
-assert list(QUERIES)[99] == "x_exact_quantiles", "slot-100 drifted"
-assert list(QUERIES)[100] == "a14_forecast_backtest", "slot-101 drifted"
-assert list(QUERIES)[147] == "ts_auc_hashclf", "slot-148 drifted"
+assert list(QUERIES)[0] == "a14_forecast_backtest", "slot-1 drifted"
+assert list(QUERIES)[47] == "ts_auc_hashclf", "slot-48 drifted"
+assert list(QUERIES)[49] == "x_markov_transitions", "slot-50 boundary drifted"
+assert list(QUERIES)[50] == "dd_lsh_tuning", "slot-51 drifted"
+assert list(QUERIES)[97] == "x_exact_quantiles", "slot-98 drifted"
+assert list(QUERIES)[98] == "tp_clean_corpus", "slot-99 drifted"
+assert list(QUERIES)[147] == "dd_jaccard_histogram", "slot-148 drifted"
 
 
 ORACLES: dict[str, str] = {

@@ -4,25 +4,30 @@ INDIRECT consumers (clean_corpus, neardup_clusters, dup_stats...).
 The base arm shadows .localCheckpoint on the shingles()/fingerprints()
 output with a no-op instance attribute — reverting exactly the new
 checkpoints without touching any other checkpoint in the same queries.
+Per query: one discarded warm-up per arm (plan compile), then PAIRS
+alternating (base, new) runs (tools/timing.run_gc) in the same session —
+pairwise deltas cancel the host drift that makes block A/B/A runs
+ambiguous.
+
+Usage: python tools/ab_indirect.py [query ...]  (SPARK_GRAFT_SF_DIR as in
+bench.py)
 """
 
 from __future__ import annotations
 
-import gc
 import json
 import os
 import statistics
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from azeroth_data_platform_spark import harness  # noqa: E402
 from azeroth_data_platform_spark.operators import dedup  # noqa: E402
 from azeroth_data_platform_spark.session import get_spark  # noqa: E402
+from tools import timing  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-PAIRS = int(os.environ.get("AB_PAIRS", "6"))
+PAIRS = 6
 
 _ORIG_SHINGLES = dedup.shingles
 _ORIG_FPS = dedup.simhash_fingerprints
@@ -50,15 +55,6 @@ def set_new() -> None:
     dedup.simhash_fingerprints = _ORIG_FPS
 
 
-def run_once(spark, name: str) -> float:
-    gc.collect()
-    t0 = time.perf_counter()
-    harness.ALL_QUERIES[name](spark, SF_DIR).write.format("noop").mode(
-        "overwrite"
-    ).save()
-    return round(time.perf_counter() - t0, 3)
-
-
 def main() -> None:
     queries = sys.argv[1:] or [
         "tp_clean_corpus",
@@ -68,34 +64,29 @@ def main() -> None:
         "dd_neardup_clusters",
     ]
     spark = get_spark("ab_indirect")
-    harness.ALL_QUERIES["a8_distinct_items"](spark, SF_DIR).write.format(
-        "noop"
-    ).mode("overwrite").save()
+    timing.warm(spark, SF_DIR)
 
     out = {}
     for q in queries:
-        base, var = [], []
-        set_base(); run_once(spark, q)
-        set_new(); run_once(spark, q)
-        for i in range(PAIRS):
-            set_base()
-            spark.sparkContext.setJobDescription(f"{q}/base/{i}")
-            base.append(run_once(spark, q))
-            set_new()
-            spark.sparkContext.setJobDescription(f"{q}/new/{i}")
-            var.append(run_once(spark, q))
-        deltas = [v - b for b, v in zip(base, var)]
+        build = timing.query(spark, SF_DIR, q)
+        runs: dict[str, list[float]] = {"base": [], "new": []}
+        for _ in range(PAIRS + 1):
+            for arm, setter in (("base", set_base), ("new", set_new)):
+                setter()
+                runs[arm].append(timing.run_gc(build))
+        base, new = runs["base"][1:], runs["new"][1:]
+        deltas = [v - b for b, v in zip(base, new)]
         out[q] = {
             "base_median": statistics.median(base),
-            "new_median": statistics.median(var),
+            "new_median": statistics.median(new),
             "pair_delta_median": statistics.median(deltas),
             "base": base,
-            "new": var,
+            "new": new,
         }
         print(
-            f"{q:24s} base={statistics.median(base):6.3f} "
-            f"new={statistics.median(var):6.3f} "
-            f"median pair delta={statistics.median(deltas):+.3f}",
+            f"{q:24s} base={out[q]['base_median']:6.3f} "
+            f"new={out[q]['new_median']:6.3f} "
+            f"median pair delta={out[q]['pair_delta_median']:+.3f}",
             flush=True,
         )
     set_new()

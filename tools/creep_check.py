@@ -2,12 +2,13 @@
 back-to-back runs WITHOUT any gc.collect.
 
 The r12 bench worked around the localCheckpoint leak with a gc.collect
-before each timed run (bench.py run_once). This script deliberately does
-NOT collect: it runs each query N times consecutively and reports wall
-seconds plus the live cached-RDD count and cached storage bytes after
-every run. With the r13 lifecycle pool the storage numbers must stay
-bounded (≤ pool cap) and times must not creep (r12 measured ann_pq_codes
-3.8 → 10 s over six runs under the old localCheckpoint pinning).
+before each timed run (tools/timing.median3). This script deliberately does
+NOT collect: it runs each query N times consecutively (timing.run_once) and
+reports wall seconds plus the live cached-RDD count and cached storage
+bytes after every run. With the r13 lifecycle pool the storage numbers must
+stay bounded (≤ pool cap) and times must not creep (r12 measured
+ann_pq_codes 3.8 → 10 s over six runs under the old localCheckpoint
+pinning).
 
 Usage: python tools/creep_check.py [sf_dir] [n_runs] [query ...]
 Defaults: /root/testdata/sf0.1, 6 runs, the r12 creep witness set.
@@ -17,12 +18,11 @@ from __future__ import annotations
 
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from azeroth_data_platform_spark import harness  # noqa: E402
 from azeroth_data_platform_spark.session import get_spark  # noqa: E402
+from tools import timing  # noqa: E402
 
 
 def main() -> int:
@@ -31,17 +31,11 @@ def main() -> int:
     names = sys.argv[3:] or ["ann_pq_codes", "dd_minhash_lsh", "x_exact_quantiles"]
     spark = get_spark("creep_check")
     sc = spark.sparkContext
-    harness.ALL_QUERIES["a8_distinct_items"](spark, sf_dir).write.format(
-        "noop"
-    ).mode("overwrite").save()
+    timing.warm(spark, sf_dir)
     for name in names:
         print(f"--- {name} (NO gc.collect between runs) ---")
         for i in range(n):
-            t0 = time.perf_counter()
-            harness.ALL_QUERIES[name](spark, sf_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            sec = round(time.perf_counter() - t0, 3)
+            sec = timing.run_once(timing.query(spark, sf_dir, name))
             infos = sc._jsc.sc().getRDDStorageInfo()
             mem = sum(x.memSize() for x in infos)
             disk = sum(x.diskSize() for x in infos)

@@ -36,68 +36,47 @@ def _read(src: str, t: str) -> pd.DataFrame:
     return pq.read_table(os.path.join(src, f"{t}.parquet")).to_pandas()
 
 
-def _write(df: pd.DataFrame, out: str, t: str, schema: pa.Schema | None = None) -> None:
+def _write(df: pd.DataFrame, src: str, out: str, t: str) -> None:
+    """Write table `t` under `out` with the source table's exact schema."""
+    schema = pq.read_schema(os.path.join(src, f"{t}.parquet"))
     tbl = pa.Table.from_pandas(df, preserve_index=False, schema=schema)
     pq.write_table(tbl, os.path.join(out, f"{t}.parquet"))
 
 
-def _offset(series: pd.Series, k: int) -> pd.Series:
-    return series + k * (int(series.max()) + 1)
+def _copies(df: pd.DataFrame, factor: int, strides: dict[str, int], edit=None) -> pd.DataFrame:
+    """`factor` stacked copies of `df` (copy 0 is the original): copy k
+    shifts every key column in `strides` by k × its stride, and
+    `edit(copy, k)` may rewrite copies k ≥ 1 in place."""
+    parts = []
+    for k in range(factor):
+        d = df.assign(**{c: df[c] + k * stride for c, stride in strides.items()})
+        if k and edit is not None:
+            edit(d, k)
+        parts.append(d)
+    return pd.concat(parts, ignore_index=True)
+
+
+def _stride(df: pd.DataFrame, col: str) -> int:
+    return int(df[col].max()) + 1
 
 
 def scale_tpch(src: str, out: str, factor: int) -> None:
-    orders = _read(src, "orders")
-    lineitem = _read(src, "lineitem")
-    customer = _read(src, "customer")
-    part = _read(src, "part")
-    supplier = _read(src, "supplier")
-
-    max_ok = int(orders["o_orderkey"].max()) + 1
-    max_pk = int(part["p_partkey"].max()) + 1
-    max_sk = int(supplier["s_suppkey"].max()) + 1
-    max_ck = int(customer["c_custkey"].max()) + 1
-
-    def copy_orders(k):
-        d = orders.copy()
-        d["o_orderkey"] += k * max_ok
-        d["o_custkey"] += k * max_ck
-        return d
-
-    def copy_lineitem(k):
-        d = lineitem.copy()
-        d["l_orderkey"] += k * max_ok
-        d["l_partkey"] += k * max_pk
-        d["l_suppkey"] += k * max_sk
-        return d
-
-    def copy_customer(k):
-        d = customer.copy()
-        d["c_custkey"] += k * max_ck
-        return d
-
-    def copy_part(k):
-        d = part.copy()
-        d["p_partkey"] += k * max_pk
-        return d
-
-    def copy_supplier(k):
-        d = supplier.copy()
-        d["s_suppkey"] += k * max_sk
-        return d
-
-    for name, fn in [
-        ("orders", copy_orders),
-        ("lineitem", copy_lineitem),
-        ("customer", copy_customer),
-        ("part", copy_part),
-        ("supplier", copy_supplier),
-    ]:
-        sch = pq.read_schema(os.path.join(src, f"{name}.parquet"))
-        _write(pd.concat([fn(k) for k in range(factor)], ignore_index=True), out, name, sch)
-
+    t = {n: _read(src, n) for n in ("orders", "lineitem", "customer", "part", "supplier")}
+    ok = _stride(t["orders"], "o_orderkey")
+    pk = _stride(t["part"], "p_partkey")
+    sk = _stride(t["supplier"], "s_suppkey")
+    ck = _stride(t["customer"], "c_custkey")
+    strides = {
+        "orders": {"o_orderkey": ok, "o_custkey": ck},
+        "lineitem": {"l_orderkey": ok, "l_partkey": pk, "l_suppkey": sk},
+        "customer": {"c_custkey": ck},
+        "part": {"p_partkey": pk},
+        "supplier": {"s_suppkey": sk},
+    }
+    for name, cols in strides.items():
+        _write(_copies(t[name], factor, cols), src, out, name)
     for name in ("nation", "region"):
-        sch = pq.read_schema(os.path.join(src, f"{name}.parquet"))
-        _write(_read(src, name), out, name, sch)
+        _write(_read(src, name), src, out, name)
 
 
 def scale_events(src: str, out: str, factor: int, ts_offset: bool = False) -> None:
@@ -109,47 +88,41 @@ def scale_events(src: str, out: str, factor: int, ts_offset: bool = False) -> No
     PSI state, dow baselines, OHLC day counts). Both regimes are real;
     the probe runner picks per question (PERF.md r9)."""
     ev = _read(src, "events")
-    max_eid = int(ev["event_id"].max()) + 1
-    max_uid = int(ev["user_id"].max()) + 1
-    span = ev["ts"].max() - ev["ts"].min()
-    import pandas as _pd
+    shift = ev["ts"].max() - ev["ts"].min() + pd.Timedelta(days=1)
 
-    day = _pd.Timedelta(days=1)
-    parts = []
-    for k in range(factor):
-        d = ev.copy()
-        d["event_id"] += k * max_eid
-        d["user_id"] += k * max_uid
+    def edit(d: pd.DataFrame, k: int) -> None:
         if ts_offset:
-            d["ts"] = d["ts"] + k * (span + day)
-        parts.append(d)
-    sch = pq.read_schema(os.path.join(src, "events.parquet"))
-    _write(pd.concat(parts, ignore_index=True), out, "events", sch)
+            d["ts"] = d["ts"] + k * shift
+
+    strides = {c: _stride(ev, c) for c in ("event_id", "user_id")}
+    _write(_copies(ev, factor, strides, edit), src, out, "events")
+
+
+def _edit_text(fn):
+    """Copy editor: rewrite each document's text with fn(text, k), then
+    keep n_chars consistent."""
+
+    def edit(d: pd.DataFrame, k: int) -> None:
+        d["text"] = d["text"].map(lambda text: fn(text, k))
+        d["n_chars"] = d["text"].str.len()
+
+    return edit
 
 
 def scale_documents(src: str, out: str, factor: int) -> None:
     docs = _read(src, "documents")
-    max_did = int(docs["doc_id"].max()) + 1
-    parts = [docs]
-    for k in range(1, factor):
-        d = docs.copy()
-        d["doc_id"] = d["doc_id"] + k * max_did
+
+    def interleave(text: str, k: int) -> str:
         tok = f"zq{k}x"  # copy token: letters+digit, no PII/lang collision
+        outw = []
+        for i, w in enumerate(text.split()):
+            outw.append(w)
+            if i % 3 == 2:
+                outw.append(f"{tok}{i}")
+        return " ".join(outw)
 
-        def interleave(text: str, tok: str = tok) -> str:
-            ws = text.split()
-            outw = []
-            for i, w in enumerate(ws):
-                outw.append(w)
-                if i % 3 == 2:
-                    outw.append(f"{tok}{i}")
-            return " ".join(outw)
-
-        d["text"] = d["text"].map(interleave)
-        d["n_chars"] = d["text"].str.len()
-        parts.append(d)
-    sch = pq.read_schema(os.path.join(src, "documents.parquet"))
-    _write(pd.concat(parts, ignore_index=True), out, "documents", sch)
+    strides = {"doc_id": _stride(docs, "doc_id")}
+    _write(_copies(docs, factor, strides, _edit_text(interleave)), src, out, "documents")
 
 
 def gen_dup_heavy_documents(src: str, out: str, factor: int) -> None:
@@ -163,24 +136,15 @@ def gen_dup_heavy_documents(src: str, out: str, factor: int) -> None:
     Only documents.parquet is written; the dup probe needs nothing else."""
     os.makedirs(out, exist_ok=True)
     docs = _read(src, "documents")
-    max_did = int(docs["doc_id"].max()) + 1
-    parts = [docs]
-    for k in range(1, factor):
-        d = docs.copy()
-        d["doc_id"] = d["doc_id"] + k * max_did
-        tok = f"dz{k}q"
 
-        def mutate(text: str, tok: str = tok) -> str:
-            ws = text.split()
-            for i in range(14, len(ws), 30):
-                ws[i] = tok
-            return " ".join(ws)
+    def mutate(text: str, k: int) -> str:
+        ws = text.split()
+        for i in range(14, len(ws), 30):
+            ws[i] = f"dz{k}q"
+        return " ".join(ws)
 
-        d["text"] = d["text"].map(mutate)
-        d["n_chars"] = d["text"].str.len()
-        parts.append(d)
-    sch = pq.read_schema(os.path.join(src, "documents.parquet"))
-    _write(pd.concat(parts, ignore_index=True), out, "documents", sch)
+    strides = {"doc_id": _stride(docs, "doc_id")}
+    _write(_copies(docs, factor, strides, _edit_text(mutate)), src, out, "documents")
 
 
 def gen_dup_heavy_embeddings(
@@ -200,34 +164,26 @@ def gen_dup_heavy_embeddings(
     tractable inside the bench budget."""
     os.makedirs(out, exist_ok=True)
     emb = _read(src, "embeddings").head(base_n).reset_index(drop=True)
-    max_vid = int(emb["vec_id"].max()) + 1
     dim = len(emb["embedding"].iloc[0])
     rng = np.random.default_rng(8151)  # frozen seed: probe must be stable
-    parts = [emb]
-    for k in range(1, factor):
-        d = emb.copy()
-        d["vec_id"] = d["vec_id"] + k * max_vid
+
+    def perturb(d: pd.DataFrame, k: int) -> None:
         noise = rng.standard_normal((len(d), dim)).astype(np.float32) * 0.02
-        vecs = np.stack(d["embedding"].to_numpy())  # (n, dim) float32
-        vecs = vecs + noise
-        vecs = vecs / np.linalg.norm(vecs, axis=1, keepdims=True)
-        d["embedding"] = list(vecs)
-        parts.append(d)
-    sch = pq.read_schema(os.path.join(src, "embeddings.parquet"))
-    _write(pd.concat(parts, ignore_index=True), out, "embeddings", sch)
+        vecs = np.stack(d["embedding"].to_numpy()) + noise  # (n, dim) float32
+        d["embedding"] = list(vecs / np.linalg.norm(vecs, axis=1, keepdims=True))
+
+    strides = {"vec_id": _stride(emb, "vec_id")}
+    _write(_copies(emb, factor, strides, perturb), src, out, "embeddings")
 
 
 def scale_embeddings(src: str, out: str, factor: int) -> None:
     emb = _read(src, "embeddings")
-    max_vid = int(emb["vec_id"].max()) + 1
-    parts = [emb]
-    for k in range(1, factor):
-        d = emb.copy()
-        d["vec_id"] = d["vec_id"] + k * max_vid
-        d["embedding"] = d["embedding"].map(lambda v, k=k: np.roll(np.asarray(v), k))
-        parts.append(d)
-    sch = pq.read_schema(os.path.join(src, "embeddings.parquet"))
-    _write(pd.concat(parts, ignore_index=True), out, "embeddings", sch)
+
+    def rotate(d: pd.DataFrame, k: int) -> None:
+        d["embedding"] = d["embedding"].map(lambda v: np.roll(np.asarray(v), k))
+
+    strides = {"vec_id": _stride(emb, "vec_id")}
+    _write(_copies(emb, factor, strides, rotate), src, out, "embeddings")
 
 
 def main() -> int:
@@ -240,14 +196,12 @@ def main() -> int:
     if dup_heavy:
         gen_dup_heavy_documents(src, out, factor)
         gen_dup_heavy_embeddings(src, out, factor)
-        for t in sorted(os.listdir(out)):
-            print(t, pq.ParquetFile(os.path.join(out, t)).metadata.num_rows)
-        return 0
-    os.makedirs(out, exist_ok=True)
-    scale_tpch(src, out, factor)
-    scale_events(src, out, factor, ts_offset=(events_mode == "ts"))
-    scale_documents(src, out, factor)
-    scale_embeddings(src, out, factor)
+    else:
+        os.makedirs(out, exist_ok=True)
+        scale_tpch(src, out, factor)
+        scale_events(src, out, factor, ts_offset=(events_mode == "ts"))
+        scale_documents(src, out, factor)
+        scale_embeddings(src, out, factor)
     for t in sorted(os.listdir(out)):
         print(t, pq.ParquetFile(os.path.join(out, t)).metadata.num_rows)
     return 0

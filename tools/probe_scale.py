@@ -2,7 +2,9 @@
 and at a gen_scale.py-generated multiple of it, print one JSON line per
 query plus a summary — the reusable form of the r8 100x flagship probe
 (PERF.md "100x scale probe"; methodology: one warm JVM, single run per
-query per size, base first).
+query per size, base first). Uses the bench's session (session.get_spark)
+and its growth loop (tools/timing.growth), so the numbers are comparable
+with bench.py's scaling section.
 
 Run:  python tools/probe_scale.py <base_sf_dir> <scaled_dir> <query...>
 """
@@ -12,41 +14,26 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession  # noqa: E402
-
-from azeroth_data_platform_spark import harness  # noqa: E402
+from azeroth_data_platform_spark.session import get_spark  # noqa: E402
+from tools import timing  # noqa: E402
 
 
 def main() -> None:
     base_dir, scaled_dir, *names = sys.argv[1:]
-    spark = (
-        SparkSession.builder.master(f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
-        .config("spark.sql.session.timeZone", "UTC")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = get_spark("probe_scale")
+    timing.warm(spark, base_dir)
     out = {}
     for name in names:
-        fn = harness.ALL_QUERIES[name]
-        t0 = time.perf_counter()
-        fn(spark, base_dir).write.format("noop").mode("overwrite").save()
-        base_s = time.perf_counter() - t0
-        t0 = time.perf_counter()
-        fn(spark, scaled_dir).write.format("noop").mode("overwrite").save()
-        big_s = time.perf_counter() - t0
-        rec = {
-            "base_sec": round(base_s, 2),
-            "scaled_sec": round(big_s, 2),
-            "growth": round(big_s / base_s, 2) if base_s > 0 else None,
-        }
-        out[name] = rec
-        print(json.dumps({name: rec}), flush=True)
+        rec, _ = timing.growth(
+            [name],
+            lambda q: timing.run_once(timing.query(spark, base_dir, q)),
+            lambda q: timing.run_once(timing.query(spark, scaled_dir, q)),
+        )
+        out.update(rec)
+        print(json.dumps(rec), flush=True)
     print(json.dumps({"probe": {"base": base_dir, "scaled": scaled_dir, "queries": out}}))
     spark.stop()
 

@@ -1,71 +1,36 @@
 """Time a list of registered queries with the bench's methodology.
 
 Usage: python tools/time_queries.py q1 q2 ...  (SPARK_GRAFT_SF_DIR / _CPUS
-as in bench.py). Per query: gc.collect before each run, 4 consecutive
-noop-sink runs, first discarded, median of last 3. A frozen canary
-(lineitem scan+aggregate, same as bench.py) runs first and last so two
-invocations of this script can be host-normalized. Prints one JSON line.
+as in bench.py). Per query: tools/timing.median3 (gc.collect before each
+run, 4 consecutive noop-sink runs, first discarded, median of last 3). The
+frozen canary (lineitem scan+aggregate, same as bench.py) runs first and
+last so two invocations of this script can be host-normalized. Prints one
+JSON line.
 """
 
 from __future__ import annotations
 
-import gc
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from azeroth_data_platform_spark import harness  # noqa: E402
 from azeroth_data_platform_spark.session import get_spark  # noqa: E402
+from tools import timing  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
 def main() -> None:
-    from pyspark.sql import functions as F
-
-    queries = sys.argv[1:]
     spark = get_spark("time_queries")
-    harness.ALL_QUERIES["a8_distinct_items"](spark, SF_DIR).write.format(
-        "noop"
-    ).mode("overwrite").save()
-
-    def canary() -> float:
-        gc.collect()
-        times = []
-        for i in range(4):
-            t0 = time.perf_counter()
-            (
-                spark.read.parquet(os.path.join(SF_DIR, "lineitem.parquet"))
-                .select(
-                    F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("v"),
-                    F.sum("l_quantity").alias("q"),
-                    F.count(F.lit(1)).alias("n"),
-                )
-                .write.format("noop")
-                .mode("overwrite")
-                .save()
-            )
-            if i:
-                times.append(time.perf_counter() - t0)
-        return round(sorted(times)[1], 3)
-
-    out: dict[str, float] = {"_canary_pre": canary()}
-    for q in queries:
-        times = []
-        for i in range(4):
-            gc.collect()
-            spark.sparkContext.setJobDescription(f"time/{q}/{i}")
-            t0 = time.perf_counter()
-            harness.ALL_QUERIES[q](spark, SF_DIR).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            times.append(round(time.perf_counter() - t0, 3))
-        out[q] = sorted(times[1:])[1]
+    timing.warm(spark, SF_DIR)
+    out: dict[str, float] = {"_canary_pre": timing.canary(spark, SF_DIR)}
+    for q in sys.argv[1:]:
+        build = timing.query(spark, SF_DIR, q)
+        out[q], times = timing.median3(lambda: timing.run_once(build))
         print(f"# {q}: median {out[q]:.3f} raw {times}", file=sys.stderr, flush=True)
-    out["_canary_post"] = canary()
+    out["_canary_post"] = timing.canary(spark, SF_DIR)
     print(json.dumps(out))
 
 
